@@ -1896,8 +1896,7 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
         }
     )
     # The driver's correctness gate evaluates the FIRST 50 entries of
-    # this dict; 86 exist (bigram_nll joined in r11), so 36 sit past
-    # the cap every round. Rotation
+    # this dict; 86 exist, so 36 sit past the cap every round. Rotation
     # is governed by the ledger invariant (tools/rotation_ledger.py +
     # tests/test_rotation.py): a query may sit past the cap ONLY if it
     # has a green driver row, neither its op modules nor its q_* wrapper
@@ -1905,75 +1904,56 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
     # row, AND the row is from the latest or the immediately previous
     # completed round (freshness budget 1 against max(recorded rounds)
     # — the halves of the query set alternate through the window round
-    # over round). The full 85 stay covered by tools/check_entry.py
+    # over round). The full 86 stay covered by tools/check_entry.py
     # (EXACT=1) locally.
     #
-    # r11 rotations IN (the freshness budget forces this — exactly the
-    # alternation SURVEY §9 planned): all 35 r9-certified corpus/text/
-    # dedup/web/pipeline rows hit age 2 > budget 1 at r11 and rotate
-    # back into the window; with them in-window, editing their modules
-    # is free — which is what the r11 fold-back used (ops/vocab.py
-    # folded into corpus.py, rle_postings deduplicated into
-    # ops/text.py). Also in-window: every r10 row over modules r11
-    # touches — unigram_nll/dsir_weights (the fold-back itself),
-    # source_cap/token_budget_sample (their module closure includes
-    # text.py), events_hourly/events_session_window/stream_funnel
-    # (streaming/ops.py session-split work) — plus the ann family
-    # (similarity.py headroom for the recall-scorecard refresh) and
-    # dedup_semantic filling the last slot.
-    # Deferred: 36 r10-certified rows over modules r11 does NOT touch
-    # (the 18 gen_* rows on the frozen generation engine, the joins.py
-    # family, the five non-text sampling rows, events_funnel, and 8
-    # single-module analytics/profile/skew/multimodal/vectors rows).
+    # r13 rotation: the 32 r10-certified rows (the 18 gen_* rows, the
+    # sampling/analytics/profile/skew/multimodal/vectors rows and the
+    # wrapper-only SQL rows) are two rounds behind r12 and rotate INTO
+    # the window; with the gen_* rows in-window the generation engine
+    # (engine/generators/core/config/oracle) is free to edit. Also
+    # in-window: the four r11 rows (they age past the budget at r13)
+    # plus the six ann rows (similarity.py) and eight text.py rows.
+    # Deferred: 36 r12-certified rows — dedup, corpus, joins, streaming,
+    # web and pipeline rows plus the text rows that also import dedup
+    # or sampling.
     deferred = [
-        # r12 rotation: the r12 job-floor pass edited ops/joins.py
-        # (_bounded_local_right fixed-width fast path), voiding the
-        # events_asof/gapfill/interval_join/range_join r10 certificates
-        # — those four rotate INTO the window for fresh rows. Deferred
-        # in their place: pricing_summary, media_features,
-        # url_canonicalize, html_extract — all r11-green and their
-        # module closures (media.py / web.py / wrapper-only SQL) are
-        # untouched by r12's corpus/dedup/joins/similarity edits.
-        # The rest are r10/r11-certified rows over modules untouched
-        # in r11+r12 (18 gen_* rows on the frozen generation engine,
-        # non-text sampling rows, events_funnel, single-module
-        # analytics/profile/skew/multimodal/vectors rows).
-        "events_funnel",
-        "gen_integer_ordered",
-        "gen_integer_random",
-        "gen_integer_distinct",
-        "gen_float32",
-        "gen_float_null",
-        "gen_datetime_ordered",
-        "gen_datetime_random",
-        "gen_enum",
-        "gen_first_name",
-        "gen_last_name",
-        "gen_phone",
-        "gen_ranges",
-        "gen_foreign_key",
-        "gen_slice_resume",
-        "gen_uuid",
-        "gen_string_simple",
-        "gen_template",
-        "gen_text",
-        "pricing_summary",
-        "media_features",
-        "url_canonicalize",
-        "html_extract",
-        "corpus_mix",
-        "data_split",
-        "data_split_by_source",
-        "quality_band",
-        "stratified_sample",
-        "profile_events",
-        "skew_salted_agg",
-        "media_audio_features",
-        "embedding_quantize",
-        "top_revenue",
-        "user_running_value",
-        "events_sessionize",
-        "events_retention",
+        "dedup_exact",
+        "dedup_jaccard",
+        "dedup_minhash",
+        "dedup_simhash",
+        "dedup_components",
+        "dedup_embedding",
+        "events_hourly",
+        "events_session_window",
+        "corpus_vocab",
+        "decontaminate",
+        "pack_sequences_chars",
+        "pack_order",
+        "curate",
+        "events_asof",
+        "events_range_join",
+        "events_rollup",
+        "dedup_semantic",
+        "events_gapfill",
+        "events_percentiles",
+        "doc_chunks",
+        "dedup_incremental",
+        "duplicate_spans",
+        "remove_duplicate_spans",
+        "unigram_nll",
+        "bigram_nll",
+        "collocations",
+        "token_divergence",
+        "zipf_fit",
+        "token_budget_sample",
+        "source_cap",
+        "events_interval_join",
+        "dedup_incremental_minhash",
+        "dsir_weights",
+        "url_dedup",
+        "stream_funnel",
+        "paragraph_dedup",
     ]
     head = {k: v for k, v in out.items() if k not in deferred}
     return {**head, **{k: out[k] for k in deferred}}

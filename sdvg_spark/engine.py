@@ -34,7 +34,7 @@ from pyspark.sql.functions import pandas_udf
 from sdvg_spark.config.model import ColumnSpec, ConfigError, GenerationConfig, ModelSpec
 from sdvg_spark.core.rng import derive_seed
 from sdvg_spark.core.sequence import ordered_col, ordered_np, perm_np, resolve_mode
-from sdvg_spark.generators.values import EnumGen, make_value_gen
+from sdvg_spark.generators.values import make_value_gen
 from sdvg_spark.session import configure_session
 
 
@@ -360,10 +360,9 @@ def value_expr(plan: ColumnPlan, num: Column, ridx: Column, r01: Column) -> Colu
 
     def range_value(r: RangePlan) -> Column:
         number = num.cast("double") + r01 * F.lit(r.factor)
-        native = r.vgen.expr(number, num)
         value = (
-            native
-            if native is not None
+            r.vgen.expr(number, num)
+            if r.vgen.is_native
             else _make_value_udf(r.vgen, r.vgen.spark_dtype)(number)
         )
         value = value.cast(plan.dtype)
@@ -385,13 +384,29 @@ def value_expr(plan: ColumnPlan, num: Column, ridx: Column, r01: Column) -> Colu
 
 
 class Engine:
-    """Config -> DataFrames -> sinks."""
+    """Config -> one DataFrame per model (``jobs.run_generate`` writes them)."""
 
     def __init__(self, cfg: GenerationConfig):
         self.cfg = cfg
 
     def plans_for(self, model: ModelSpec) -> list[ColumnPlan]:
         return [plan_column(self.cfg, model, c) for c in model.columns]
+
+    def _base(
+        self,
+        spark: SparkSession,
+        model: ModelSpec,
+        generate_from: int | None,
+        generate_to: int | None,
+        num_partitions: int | None,
+    ) -> DataFrame:
+        """The row-id frame every model and column is evaluated over."""
+        configure_session(spark)
+        lo = model.generate_from if generate_from is None else generate_from
+        hi = model.generate_to if generate_to is None else generate_to
+        if num_partitions:
+            return spark.range(lo, hi, 1, num_partitions)
+        return spark.range(lo, hi)
 
     def model_df(
         self,
@@ -402,17 +417,23 @@ class Engine:
         num_partitions: int | None = None,
         keep_id: bool = False,
     ) -> DataFrame:
-        configure_session(spark)
         model = self.cfg.models[model_name]
-        lo = model.generate_from if generate_from is None else generate_from
-        hi = model.generate_to if generate_to is None else generate_to
-        base = (
-            spark.range(lo, hi, 1, num_partitions)
-            if num_partitions
-            else spark.range(lo, hi)
-        )
-        plans = self.plans_for(model)
-        return self.apply_columns(spark, base, plans, keep_id=keep_id)
+        base = self._base(spark, model, generate_from, generate_to, num_partitions)
+        return self.apply_columns(spark, base, self.plans_for(model), keep_id=keep_id)
+
+    def column_df(
+        self,
+        spark: SparkSession,
+        model_name: str,
+        column_name: str,
+        num_partitions: int | None = None,
+    ) -> DataFrame:
+        """(id, <column>) for exactly one column — avoids planning the
+        whole model (oracle checks are per-column)."""
+        model = self.cfg.models[model_name]
+        plan = plan_column(self.cfg, model, model.column(column_name))
+        base = self._base(spark, model, None, None, num_partitions)
+        return self.apply_columns(spark, base, [plan], keep_id=True)
 
     def apply_columns(
         self,
@@ -466,58 +487,3 @@ class Engine:
         if keep_id:
             exprs = [F.col("id"), *exprs]
         return staged.select(*extra, *exprs)
-
-    def model_df_with_id(self, spark: SparkSession, model_name: str, **kw) -> DataFrame:
-        """model_df plus the raw row-id column (oracle comparisons)."""
-        return self.model_df(spark, model_name, keep_id=True, **kw)
-
-    def column_df(
-        self,
-        spark: SparkSession,
-        model_name: str,
-        column_name: str,
-        num_partitions: int | None = None,
-    ) -> DataFrame:
-        """(id, <column>) for exactly one column — avoids planning the
-        whole model (oracle checks are per-column)."""
-        configure_session(spark)
-        model = self.cfg.models[model_name]
-        plan = plan_column(self.cfg, model, model.column(column_name))
-        lo, hi = model.generate_from, model.generate_to
-        base = (
-            spark.range(lo, hi, 1, num_partitions)
-            if num_partitions
-            else spark.range(lo, hi)
-        )
-        if plan.pure_native:
-            r = plan.ranges[0]
-            num = ordered_col(F.col("id"), r.distinct, r.cnt)
-            ridx = F.lit(0)
-            r01 = F.lit(0.0)
-            staged = base
-        elif plan.fully_udf:
-            kernel = _make_fused_kernel(plan, spark)
-            return base.select(
-                F.col("id"), kernel(F.col("id")).alias(plan.name)
-            )
-        else:
-            kernel = _make_sequence_kernel(plan, spark)
-            staged = base.select(F.col("id"), kernel(F.col("id")).alias("__seq"))
-            num = F.col("__seq.num")
-            ridx = F.col("__seq.ridx")
-            r01 = F.col("__seq.r01")
-        return staged.select(F.col("id"), value_expr(plan, num, ridx, r01))
-
-    def run(self, spark: SparkSession, models: list[str] | None = None) -> dict[str, str]:
-        """Generate + write every (non-ignored) model. Returns model->path."""
-        from sdvg_spark.sinks.writers import write_model
-
-        written: dict[str, str] = {}
-        for name, model in self.cfg.models.items():
-            if name in self.cfg.models_to_ignore:
-                continue
-            if models is not None and name not in models:
-                continue
-            df = self.model_df(spark, name)
-            written[name] = write_model(spark, df, model, self.cfg.output)
-        return written

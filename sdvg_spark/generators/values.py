@@ -6,12 +6,18 @@ number-th element of the type's totally ordered value space after
 ``set_total(distinct_count)``; ``values_count`` is the size of that
 space (used to clamp distinct counts and derive the jitter factor).
 
-Each generator exposes up to three synchronized forms:
+Each generator exposes two synchronized forms, chosen by ``is_native``:
 
-* ``expr(number, num)``  — native Spark Column (JVM, codegen); preferred
-* ``np_value(number)``   — numpy kernel for the Arrow/pandas-UDF path
-* ``sql(number_expr)``   — DuckDB SQL mirror for exact oracle queries
-                           (None when not SQL-expressible)
+* ``expr(number, num)``  — native Spark Column (JVM, codegen), for
+                           generators whose ``is_native`` is True
+* ``np_value(number)``   — numpy kernel for the Arrow/pandas-UDF path;
+                           exists only on generators whose ``is_native``
+                           is False (uuid; template, plain and text
+                           strings — StringGen's name and phone forms
+                           are native and have no numpy kernel)
+
+plus ``sql(number_expr)``, the DuckDB SQL mirror for exact oracle
+queries (None when not SQL-expressible).
 
 ``number`` is the jittered draw (float64 = num + frf*factor, frf < 1 so
 ``floor(number) == num`` always); ``num`` is the integer draw.
@@ -45,24 +51,6 @@ def _unix_sec_nsec(dt: datetime) -> tuple[int, int]:
     sec = delta.days * 86400 + delta.seconds
     nsec = delta.microseconds * 1000
     return sec, nsec
-
-
-def _ordered_int64_py(from_: int, to: int, number: float, total: int) -> int:
-    step = (float(to) - float(from_) + 1.0) / float(total)
-    v = step * number
-    u = int(v) & ((1 << 64) - 1)
-    if u >= (1 << 63):
-        u -= 1 << 64
-    return from_ + u
-
-
-def _ordered_int64_np(from_: int, to: int, number: np.ndarray, total: int) -> np.ndarray:
-    step = (float(to) - float(from_) + 1.0) / float(total)
-    v = step * number
-    u = v.astype(np.uint64)  # trunc toward zero; v >= 0 always
-    with np.errstate(over="ignore"):
-        # from + int64(uint64(v)): two's-complement wrap addition
-        return u.view(np.int64) + np.int64(from_)
 
 
 def _ordered_int64_col(from_: int, to: int, number: Column, total: int) -> Column:
@@ -113,11 +101,6 @@ class IntegerGen:
         v = _ordered_int64_col(self.p.from_, self.p.to, number, self.total)
         return v.cast(self.spark_dtype)
 
-    def np_value(self, number: np.ndarray) -> np.ndarray:
-        v = _ordered_int64_np(self.p.from_, self.p.to, number, self.total)
-        dt = {8: np.int8, 16: np.int16, 32: np.int32, 64: np.int64}[self.p.bit_width]
-        return v.astype(dt)
-
     def sql(self, number_expr: str) -> str | None:
         base = _ordered_int64_sql(self.p.from_, self.p.to, number_expr, self.total)
         if base is None:
@@ -152,14 +135,6 @@ class FloatGen:
             s = number / F.lit(float(self.total))
             v = F.lit(self.p.from_) * (F.lit(1.0) - s) + F.lit(self.p.to) * s
         return v.cast(self.spark_dtype)
-
-    def np_value(self, number: np.ndarray) -> np.ndarray:
-        if self.p.from_ == self.p.to:
-            v = np.full(len(number), self.p.from_)
-        else:
-            s = number / float(self.total)
-            v = self.p.from_ * (1.0 - s) + self.p.to * s
-        return v.astype(np.float32) if self.p.bit_width == 32 else v
 
     def sql(self, number_expr: str) -> str | None:
         if self.p.from_ == self.p.to:
@@ -211,14 +186,6 @@ class DateTimeGen:
             return vsec * F.lit(1_000_000_000) + vnsec
         return F.timestamp_micros(vsec * F.lit(1_000_000) + (vnsec / F.lit(1000)).cast("long"))
 
-    def np_value(self, number: np.ndarray) -> np.ndarray:
-        vsec = _ordered_int64_np(self.from_sec, self.to_sec, number, self.total)
-        vnsec = _ordered_int64_np(self.from_nsec, self.to_nsec, number, self.total)
-        vnsec = np.where(vnsec > 1_000_000_000, vnsec - 1_000_000_000, vnsec)
-        if self.ns_unit:
-            return vsec * 1_000_000_000 + vnsec  # int64 nanos
-        return vsec * 1_000_000 + vnsec // 1000  # int64 micros
-
     def sql(self, number_expr: str) -> str | None:
         vsec = _ordered_int64_sql(self.from_sec, self.to_sec, number_expr, self.total)
         vnsec_raw = _ordered_int64_sql(self.from_nsec, self.to_nsec, number_expr, self.total)
@@ -249,9 +216,6 @@ class UUIDGen:
 
     def set_total(self, total: int) -> None:
         self.total = max(total, 1)
-
-    def expr(self, number: Column, num: Column) -> None:
-        return None  # UDF path only
 
     # canonical 8-4-4-4-12 layout: char positions of each byte's nibbles
     _DASHES = (8, 13, 18, 23)
@@ -335,13 +299,6 @@ class EnumGen:
             "uuid": "string",
         }[self.column_type]
 
-    def dtype_for(self, bit_width: int | None = None) -> str:
-        if self.column_type == "integer" and bit_width:
-            return {8: "tinyint", 16: "smallint", 32: "int", 64: "bigint"}[bit_width]
-        if self.column_type == "float" and bit_width:
-            return "float" if bit_width == 32 else "double"
-        return self.spark_dtype
-
     def values_count(self) -> float:
         return float(len(self.values))
 
@@ -349,20 +306,10 @@ class EnumGen:
         self.total = max(total, 1)
         self.rows_per_value = math.ceil(self.total / len(self.values))
 
-    def _array_lit(self, dtype: str) -> Column:
-        return F.array(*[F.lit(v).cast(dtype) for v in self.values])
-
-    def expr(self, number: Column, num: Column, dtype: str | None = None) -> Column:
-        dt = dtype or self.spark_dtype
+    def expr(self, number: Column, num: Column) -> Column:
+        items = F.array(*[F.lit(v).cast(self.spark_dtype) for v in self.values])
         idx = F.floor(num / F.lit(self.rows_per_value)).cast("int")
-        return F.element_at(self._array_lit(dt), idx + F.lit(1))
-
-    def np_value(self, number: np.ndarray) -> np.ndarray:
-        idx = (number.astype(np.int64) // self.rows_per_value).astype(np.int64)
-        out = np.empty(len(number), dtype=object)
-        for r in range(len(number)):
-            out[r] = self.values[int(idx[r])]
-        return out
+        return F.element_at(items, idx + F.lit(1))
 
     def sql(self, num_expr: str, duck_type: str | None = None) -> str:
         def lit(v) -> str:
@@ -529,19 +476,15 @@ class StringGen:
 
     # -- native paths -------------------------------------------------------
 
-    def expr(self, number: Column, num: Column) -> Column | None:
+    def expr(self, number: Column, num: Column) -> Column:
         p = self.p
-        if p.template:
-            return None  # UDF
         if p.logical_type == "first_name":
             names = self.pack.first_names(p.min_length, p.max_length)
             return self._list_pick_col(names, number)
         if p.logical_type == "last_name":
             names = self.pack.last_names_filtered(p.min_length, p.max_length)
             return self._list_pick_col(names, number)
-        if p.logical_type == "phone":
-            return self._phone_col(number)
-        return None  # text / simple string -> UDF
+        return self._phone_col(number)
 
     def _list_pick_col(self, items: list[str], number: Column) -> Column:
         """n-th element of a sorted name list (reference firstName/
@@ -930,44 +873,9 @@ class StringGen:
         p = self.p
         if p.template:
             return self._template_np(number)
-        if p.logical_type == "first_name":
-            items = self.pack.first_names(p.min_length, p.max_length)
-            return self._list_pick_np(items, number)
-        if p.logical_type == "last_name":
-            items = self.pack.last_names_filtered(p.min_length, p.max_length)
-            return self._list_pick_np(items, number)
-        if p.logical_type == "phone":
-            return self._phone_np(number)
         if p.logical_type == "text":
             return self._text_np(number)
         return self._simple_np(number)
-
-    def _list_pick_np(self, items: list[str], number: np.ndarray) -> np.ndarray:
-        pos = _ordered_int64_np(0, len(items) - 1, number, self.total)
-        arr = np.array(items, dtype=object)
-        return arr[pos.astype(np.int64)]
-
-    def _phone_np(self, number: np.ndarray) -> np.ndarray:
-        """Pattern pick + zero-padded digit fill (reference phone,
-        value/string.go:221-237)."""
-        pats = self.pack.phone_patterns_filtered(self.p.min_length, self.p.max_length)
-        pos = _ordered_int64_np(0, len(pats) - 1, number, self.total)
-        out = np.empty(len(number), dtype=object)
-        for r in range(len(number)):
-            pat = pats[int(pos[r])]
-            ndig = pat.count("#")
-            pn = _ordered_int64_py(0, 10**ndig - 1, float(number[r]), self.total)
-            digits = str(pn).zfill(ndig)
-            buf = []
-            di = 0
-            for ch in pat:
-                if ch == "#":
-                    buf.append(digits[di])
-                    di += 1
-                else:
-                    buf.append(ch)
-            out[r] = "".join(buf)
-        return out
 
     def _template_np(self, number: np.ndarray) -> np.ndarray:
         """Digit-chain fill of A/a/0/# template slots (reference

@@ -21,7 +21,7 @@ import numpy as np
 from sdvg_spark.config.model import GenerationConfig
 from sdvg_spark.core.rng import dlit, frf_cte_chain
 from sdvg_spark.core.sequence import feistel_np, lfsr_walk, ordered_sql, range_perm_mode
-from sdvg_spark.engine import ColumnPlan, plan_column
+from sdvg_spark.engine import plan_column
 from sdvg_spark.generators.values import EnumGen
 
 # Hard cap on embedded permutation-literal size (rows); oracle queries
@@ -182,10 +182,3 @@ def _duck_type(spark_dtype: str) -> str:
         "string": "VARCHAR",
     }[spark_dtype]
 
-
-def single_column_df(spark, cfg: GenerationConfig, model_name: str, column_name: str):
-    """Engine-side counterpart of :func:`column_oracle_sql`: DataFrame
-    of (id, <column>) for exactly one column."""
-    from sdvg_spark.engine import Engine
-
-    return Engine(cfg).column_df(spark, model_name, column_name)

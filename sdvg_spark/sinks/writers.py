@@ -173,50 +173,31 @@ def write_model(
         df.write.format("noop").mode("overwrite").save()
         return "noop://"
 
-    if out.type == "csv":
-        pdf, parts = _prepare_partitioning(
-            _coalesce_for_rotation(_csv_formatted(df, out), model), model
+    if out.type in ("csv", "parquet"):
+        csv = out.type == "csv"
+        fdf = _coalesce_for_rotation(
+            _csv_formatted(df, out) if csv else _parquet_rounded(df, out), model
         )
-        w = (
-            pdf.write.mode(mode)
-            .option("header", not out.without_headers)
-            .option("sep", out.delimiter)
-            .option("emptyValue", "")
-            .option("maxRecordsPerFile", model.rows_per_file or 0)
-        )
-        if parts:
-            w = w.partitionBy(*parts)
-        w.csv(path)
-        _restore_layout(path, model, ".csv")
-        return path
-
-    if out.type == "parquet":
         # pyarrow path when per-column encodings are configured OR the
         # codec is one Spark's writer can't produce (BROTLI / LZ4_RAW,
         # reference writer/parquet/parquet.go:34-43)
-        if (
+        if not csv and (
             out.compression.lower() in OutputConfig.PYARROW_ONLY_CODECS
             or any(c.parquet is not None and c.parquet.encoding != "PLAIN"
                    for c in model.columns)
         ):
             from sdvg_spark.sinks.parquet_encodings import write_parquet_encoded
 
-            enc_df = _coalesce_for_rotation(_parquet_rounded(df, out), model)
             if out.sort_by:
-                enc_df = enc_df.sortWithinPartitions(*out.sort_by)
+                fdf = fdf.sortWithinPartitions(*out.sort_by)
             elif out.zorder_by:
                 from sdvg_spark.sinks.zorder import apply_zorder
 
-                enc_df = apply_zorder(enc_df, model, out)
-            write_parquet_encoded(enc_df, model, out, path, mode)
+                fdf = apply_zorder(fdf, model, out)
+            write_parquet_encoded(fdf, model, out, path, mode)
             return path
-        spark.conf.set(
-            "spark.sql.parquet.outputTimestampType",
-            "TIMESTAMP_MILLIS" if out.timestamp_unit == "millis" else "TIMESTAMP_MICROS",
-        )
-        pdf, parts = _prepare_partitioning(
-            _coalesce_for_rotation(_parquet_rounded(df, out), model), model
-        )
+        pdf, parts = _prepare_partitioning(fdf, model)
+        # sort_by / zorder_by are parquet-only (validated in config)
         if out.sort_by:
             # task-local sort (no shuffle): each output file's row groups
             # get tight, non-overlapping min/max stats on the sort keys,
@@ -235,15 +216,27 @@ def write_model(
             from sdvg_spark.sinks.zorder import apply_zorder
 
             pdf = apply_zorder(pdf, model, out, lead=parts)
+        if csv:
+            options = {
+                "header": not out.without_headers,
+                "sep": out.delimiter,
+                "emptyValue": "",
+            }
+        else:
+            spark.conf.set(
+                "spark.sql.parquet.outputTimestampType",
+                "TIMESTAMP_MILLIS" if out.timestamp_unit == "millis" else "TIMESTAMP_MICROS",
+            )
+            options = {"compression": out.compression}
         w = (
             pdf.write.mode(mode)
-            .option("compression", out.compression)
+            .options(**options)
             .option("maxRecordsPerFile", model.rows_per_file or 0)
         )
         if parts:
             w = w.partitionBy(*parts)
-        w.parquet(path)
-        _restore_layout(path, model, ".parquet")
+        w.format(out.type).save(path)
+        _restore_layout(path, model, f".{out.type}")
         return path
 
     if out.type in ("http", "tcs"):

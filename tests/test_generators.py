@@ -404,3 +404,62 @@ def test_feistel_mode_engine_vs_oracle_exact(spark):
         assert sql is not None
         want = {int(i): int(v) for i, v in duckdb.connect().execute(sql).fetchall()}
         assert got == want and len(got) == 3000, col
+
+
+COLUMN_DF_CFG = {
+    "random_seed": 17,
+    "models": {
+        "p": {
+            "rows_count": 600,
+            "columns": [
+                # pure-native: closed-form expression of id, no kernel
+                {"name": "i_ord", "type": "integer",
+                 "type_params": {"bit_width": 64, "from": 1, "to": 600}, "ordered": True},
+                # single-range sequencer: its kernel emits no ridx field
+                {"name": "i_rand", "type": "integer",
+                 "type_params": {"bit_width": 32, "from": -50, "to": 50},
+                 "null_percentage": 0.1},
+                {"name": "i_multi", "type": "integer", "ranges": [
+                    {"type_params": {"bit_width": 32, "from": 0, "to": 100},
+                     "range_percentage": 0.5},
+                    {"type_params": {"bit_width": 32, "from": 1000, "to": 2000},
+                     "range_percentage": 0.3},
+                    {"type_params": {"bit_width": 32, "from": 10**6, "to": 10**7},
+                     "range_percentage": 0.2, "ordered": True}]},
+                {"name": "uuid", "type": "uuid"},
+                {"name": "text", "type": "string",
+                 "type_params": {"logical_type": "text", "min_length": 8, "max_length": 32}},
+                # one native (phone) and one UDF (text) range in one column
+                {"name": "phone_text", "type": "string", "ranges": [
+                    {"type_params": {"logical_type": "phone"}, "range_percentage": 0.5},
+                    {"type_params": {"logical_type": "text", "min_length": 8,
+                                     "max_length": 32},
+                     "range_percentage": 0.5}]},
+            ],
+        },
+        "c": {"rows_count": 900, "columns": [{"name": "fk", "foreign_key": "p.i_rand"}]},
+    },
+}
+
+
+@pytest.mark.parametrize(
+    "model,column",
+    [("p", "i_ord"), ("p", "i_rand"), ("p", "i_multi"), ("p", "uuid"), ("p", "text"),
+     ("p", "phone_text"), ("c", "fk")],
+)
+def test_column_df_matches_model_df(spark, model, column):
+    """column_df(m, c) is column c of model_df(m, keep_id=True), row by
+    row: both run through the same column dispatch."""
+    from pyspark.sql import functions as F
+
+    eng = Engine(parse_config(COLUMN_DF_CFG))
+    got = eng.column_df(spark, model, column)
+    assert got.columns == ["id", column]
+    want = eng.model_df(spark, model, keep_id=True).select(
+        "id", F.col(column).alias("want")
+    )
+    joined = got.join(want, "id", "full_outer")
+    rows = COLUMN_DF_CFG["models"][model]["rows_count"]
+    assert joined.count() == rows
+    assert joined.filter(~F.col(column).eqNullSafe(F.col("want"))).count() == 0
+    assert joined.filter(F.col(column).isNotNull()).count() > 0
