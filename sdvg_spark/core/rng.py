@@ -9,7 +9,7 @@ generator/utils.go:180-196).
 
 Three synchronized implementations, bit-identical to each other:
 
-* :func:`frf_np`    — numpy uint64, used inside Arrow-batched pandas UDFs
+* :func:`frf_np`    — numpy uint64, used inside the engine's Arrow UDFs
 * :func:`frf_col`   — native Spark Column ops (JVM-side, codegen-able);
                       requires ``spark.sql.ansi.enabled=false`` so signed
                       longs wrap (two's-complement == mod 2^64)

@@ -9,11 +9,12 @@ generation is embarrassingly parallel and idempotent under any
 partitioning. At 100 TB this means: no stage boundaries, no skew, output
 parallelism == input splits of ``range``.
 
-The one non-native step is the seeded permutation (a pandas UDF over
+The one non-native step is the seeded permutation (an Arrow UDF over
 Arrow batches — numpy uint64 kernels). Columns whose sequencers are all
 *ordered* skip it entirely and stay in whole-stage codegen. Value
 functions are native Column expressions for integer/float/datetime/enum/
-name/phone; uuid/template/plain-string/text use vectorized numpy UDFs.
+name/phone; uuid/template/plain-string/text use vectorized numpy kernels
+inside Arrow UDFs.
 
 Foreign keys re-evaluate the *parent's* pure expression on the child's
 row-ids (the reference's zero-shuffle trick, task.go:86-114): referential
@@ -26,10 +27,10 @@ import math
 from dataclasses import dataclass
 
 import numpy as np
-import pandas as pd
+import pyarrow as pa
 from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql import functions as F
-from pyspark.sql.functions import pandas_udf
+from pyspark.sql.functions import arrow_udf
 
 from sdvg_spark.config.model import ColumnSpec, ConfigError, GenerationConfig, ModelSpec
 from sdvg_spark.core.rng import derive_seed
@@ -73,7 +74,7 @@ class ColumnPlan:
     def fully_udf(self) -> bool:
         """Every range's value generator needs the Python path (uuid,
         free-form strings, templates, text): fuse sequencer + value into
-        ONE pandas UDF so each row crosses the JVM<->Arrow boundary once,
+        ONE Arrow UDF so each row crosses the JVM<->Arrow boundary once,
         not twice."""
         return all(not r.vgen.is_native for r in self.ranges)
 
@@ -195,7 +196,7 @@ def _column_dtype(data_column: ColumnSpec, plans: list[RangePlan]) -> str:
 
 
 # ---------------------------------------------------------------------------
-# sequencer kernel (the only pandas-UDF stage of the pipeline)
+# sequencer kernel (the only Arrow-UDF stage of the pipeline)
 
 
 def _make_sequencer(plan: ColumnPlan, spark: SparkSession):
@@ -274,7 +275,7 @@ def _make_sequencer(plan: ColumnPlan, spark: SparkSession):
 
 
 def _make_sequence_kernel(plan: ColumnPlan, spark: SparkSession):
-    """pandas UDF: id -> struct(ridx, num, r01) — struct(num, r01) for
+    """Arrow UDF: id -> struct(ridx, num, r01) — struct(num, r01) for
     single-range columns, whose ridx is the constant 0 (the dispatch
     field would ship 4 dead bytes per row per column through Arrow;
     at the 20M-row bench mix that is ~320 MB of transfer for nothing).
@@ -287,66 +288,81 @@ def _make_sequence_kernel(plan: ColumnPlan, spark: SparkSession):
     fields.
     """
     compute = _make_sequencer(plan, spark)
+    multi = len(plan.ranges) > 1
 
-    if len(plan.ranges) == 1:
-
-        @pandas_udf("num long, r01 double")
-        def kernel(ids: pd.Series) -> pd.DataFrame:
-            idx = ids.to_numpy(dtype=np.int64).astype(np.uint64)
-            _, num, r01 = compute(idx)
-            return pd.DataFrame({"num": num.astype(np.int64), "r01": r01})
-
-        return kernel
-
-    @pandas_udf("ridx int, num long, r01 double")
-    def kernel(ids: pd.Series) -> pd.DataFrame:
-        idx = ids.to_numpy(dtype=np.int64).astype(np.uint64)
-        ridx, num, r01 = compute(idx)
-        return pd.DataFrame(
-            {"ridx": ridx.astype(np.int32), "num": num.astype(np.int64), "r01": r01}
-        )
+    @arrow_udf("ridx int, num long, r01 double" if multi else "num long, r01 double")
+    def kernel(ids: pa.Array) -> pa.Array:
+        ridx, num, r01 = compute(_ids_np(ids))
+        fields = {"num": pa.array(num.view(np.int64)), "r01": pa.array(r01)}
+        if multi:
+            fields = {"ridx": pa.array(ridx.astype(np.int32)), **fields}
+        return pa.StructArray.from_arrays(list(fields.values()), names=list(fields))
 
     return kernel
 
 
+def _ids_np(ids: pa.Array) -> np.ndarray:
+    return ids.to_numpy(zero_copy_only=False).astype(np.uint64)
+
+
+def _strings(vals: np.ndarray, nulls: np.ndarray | None) -> pa.Array:
+    """A numpy value kernel's output as an Arrow string array; rows where
+    ``nulls`` is True become null.
+
+    Fixed-width byte strings (``S<w>``, every row exactly w ASCII bytes:
+    the uuid kernel) are handed to Arrow as buffers, with no per-row
+    conversion; unicode (``U<w>``) and object arrays go through
+    ``pa.array``."""
+    if vals.dtype.kind != "S":
+        return pa.array(vals, type=pa.string(), mask=nulls)
+    n, w = len(vals), vals.dtype.itemsize
+    validity = None if nulls is None else pa.py_buffer(np.packbits(~nulls, bitorder="little"))
+    offsets = pa.py_buffer(np.arange(0, (n + 1) * w, w, dtype=np.int32))
+    data = pa.py_buffer(np.ascontiguousarray(vals))
+    return pa.Array.from_buffers(pa.string(), n, [validity, offsets, data])
+
+
 def _make_fused_kernel(plan: ColumnPlan, spark: SparkSession):
-    """pandas UDF: id -> final value, for columns whose every range needs
-    the Python value path (uuid/template/plain-string/text).
+    """Arrow UDF: id -> final value, for columns whose every range needs
+    the Python value path (uuid/template/plain-string/text; all string
+    typed).
 
     Fusing sequencer + jitter + null gate + value into one UDF halves
     the JVM<->Arrow round-trips versus kernel + value-UDF chaining —
-    measured 35 s -> ~8 s for 2M uuid rows on local[32].
+    measured 35 s -> ~8 s for 2M uuid rows on local[32]. Nulls are a
+    validity mask over each range's values; a multi-range column
+    concatenates its ranges' arrays and takes them back into row order.
     """
     compute = _make_sequencer(plan, spark)
     ranges = plan.ranges
 
-    @pandas_udf(plan.dtype)
-    def kernel(ids: pd.Series) -> pd.Series:
-        idx = ids.to_numpy(dtype=np.int64).astype(np.uint64)
-        ridx, num, r01 = compute(idx)
-        numf = num.astype(np.float64)
-        out = pd.Series(np.empty(len(idx), dtype=object))
-        for r in ranges:
-            m = ridx == r.index if len(ranges) > 1 else np.ones(len(idx), dtype=bool)
-            if not m.any():
-                continue
-            number = numf[m] + r01[m] * r.factor
-            vals = pd.Series(r.vgen.np_value(number))
-            if r.null_pct > 0:
-                vals[np.asarray(r01[m] < r.null_pct)] = None
-            out[np.asarray(m)] = vals.to_numpy(dtype=object)
-        return out
+    def range_values(r: RangePlan, num: np.ndarray, r01: np.ndarray) -> pa.Array:
+        vals = r.vgen.np_value(num.astype(np.float64) + r01 * r.factor)
+        return _strings(vals, r01 < r.null_pct if r.null_pct > 0 else None)
+
+    @arrow_udf(plan.dtype)
+    def kernel(ids: pa.Array) -> pa.Array:
+        ridx, num, r01 = compute(_ids_np(ids))
+        if len(ranges) == 1:
+            return range_values(ranges[0], num, r01)
+        rows = [np.flatnonzero(ridx == r.index) for r in ranges]
+        parts = [range_values(r, num[m], r01[m]) for r, m in zip(ranges, rows) if len(m)]
+        if not parts:
+            return pa.array([], type=pa.string())
+        pos = np.empty(len(ridx), dtype=np.int64)
+        pos[np.concatenate(rows)] = np.arange(len(ridx))
+        return pa.concat_arrays(parts).take(pos)
 
     return kernel
 
 
 def _make_value_udf(vgen, dtype: str):
-    """Vectorized numpy value kernel for the non-native generators."""
+    """Arrow UDF over the jittered draw number: the vectorized numpy
+    value kernel of a non-native generator (string typed)."""
 
-    @pandas_udf(dtype)
-    def value_udf(number: pd.Series) -> pd.Series:
-        out = vgen.np_value(number.to_numpy(dtype=np.float64))
-        return pd.Series(out)
+    @arrow_udf(dtype)
+    def value_udf(number: pa.Array) -> pa.Array:
+        return _strings(vgen.np_value(number.to_numpy(zero_copy_only=False)), None)
 
     return value_udf
 

@@ -10,11 +10,14 @@ Each generator exposes two synchronized forms, chosen by ``is_native``:
 
 * ``expr(number, num)``  — native Spark Column (JVM, codegen), for
                            generators whose ``is_native`` is True
-* ``np_value(number)``   — numpy kernel for the Arrow/pandas-UDF path;
-                           exists only on generators whose ``is_native``
-                           is False (uuid; template, plain and text
+* ``np_value(number)``   — numpy kernel for the Arrow-UDF path; exists
+                           only on generators whose ``is_native`` is
+                           False (uuid; template, plain and text
                            strings — StringGen's name and phone forms
-                           are native and have no numpy kernel)
+                           are native and have no numpy kernel). It
+                           returns fixed-width bytes (``S<w>``, handed
+                           to Arrow as buffers), unicode or object
+                           strings
 
 plus ``sql(number_expr)``, the DuckDB SQL mirror for exact oracle
 queries (None when not SQL-expressible).
@@ -244,7 +247,7 @@ class UUIDGen:
         for j, (hi, lo) in enumerate(self._NIBBLE_POS):
             out[:, hi] = self._HEX[b[:, j] >> 4]
             out[:, lo] = self._HEX[b[:, j] & 0xF]
-        return out.reshape(-1).view("S36").astype("U36")
+        return out.reshape(-1).view("S36")
 
     def sql(self, number_expr: str) -> str | None:
         return None

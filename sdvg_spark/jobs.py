@@ -108,7 +108,7 @@ def run_generate(
 
         spark = get_spark()
 
-    from sdvg_spark.sinks.writers import write_model
+    from sdvg_spark.sinks.writers import write_model, write_tasks
 
     eng = Engine(cfg)
     written: dict[str, str] = {}
@@ -125,10 +125,15 @@ def run_generate(
         # analogue of the reference's 5 s checkpoint ticker — one write
         # action is atomic, so the tick rides the slice boundary).
         step = out.checkpoint_rows if file_sink and out.checkpoint_rows > 0 else total
+        # file sinks size the range to the write: one task per rotated
+        # file (capped by cores), decided before generation
+        tasks = write_tasks(spark, m) if file_sink else None
         start = m.generate_from + done
         while start < m.generate_to:
             end = min(start + step, m.generate_to)
-            df = eng.model_df(spark, m.name, generate_from=start, generate_to=end)
+            df = eng.model_df(
+                spark, m.name, generate_from=start, generate_to=end, num_partitions=tasks
+            )
             mode = "append" if start > m.generate_from else "overwrite"
             written[m.name] = write_model(spark, df, m, out, mode=mode)
             if file_sink:

@@ -1,9 +1,12 @@
 """Sinks: devnull / CSV / Parquet / HTTP / TCS, with Hive partitioning.
 
 Spark-native mappings of the reference writers (SURVEY.md §2.4):
-rotation (``rows_per_file``) -> ``maxRecordsPerFile``; Hive partition
-routing -> ``partitionBy``; CSV float precision and datetime formats ->
-pre-write formatting expressions; HTTP/TCS micro-batched POST ->
+rotation (``rows_per_file``) -> the task count of the model's
+``spark.range`` (:func:`write_tasks`, chosen when the range is built;
+nothing is coalesced after generation) plus ``maxRecordsPerFile``, so
+each task writes whole files; Hive partition routing -> ``partitionBy``;
+CSV float precision and datetime formats -> pre-write formatting
+expressions; HTTP/TCS micro-batched POST ->
 ``foreachPartition`` with exponential backoff.
 
 Layout parity (reference model_writer.go:166-233, csv.go:339-341,
@@ -73,25 +76,16 @@ def _parquet_rounded(df: DataFrame, out: OutputConfig) -> DataFrame:
     return df.select(*cols)
 
 
-_ROWS_PER_TASK_CAP = 10_000_000
-
-
-def _coalesce_for_rotation(df: DataFrame, model: ModelSpec) -> DataFrame:
-    """Shrink task count toward ``ceil(rows / rows_per_file)`` so file
-    counts track the reference's single-writer rotation instead of one
-    file per task. Never coalesces a task above ~10M rows: a small model
-    gets file-count parity, a 1e9-row model keeps its write parallelism
-    (file-count parity is not worth serializing a cluster-scale write).
-    """
+def write_tasks(spark: SparkSession, model: ModelSpec) -> int | None:
+    """Range partitions (= write tasks) for a CSV/Parquet model:
+    ``ceil(rows / rows_per_file)`` so file counts track the reference's
+    single-writer rotation, at least one task per 10M rows (a 1e9-row
+    model keeps its write parallelism) and at most one per core. None
+    keeps ``spark.range``'s default."""
     if not model.rows_count or not model.rows_per_file:
-        return df
-    target = -(-model.rows_count // model.rows_per_file)
-    floor_tasks = -(-model.rows_count // _ROWS_PER_TASK_CAP)
-    want = max(target, floor_tasks)
-    # coalesce() can only reduce partition count (no-op when want >=
-    # current), so no partition probe is needed — probing via df.rdd
-    # forced a physical-plan build per write call.
-    return df.coalesce(want)
+        return None
+    want = max(-(-model.rows_count // model.rows_per_file), -(-model.rows_count // 10_000_000))
+    return min(want, spark.sparkContext.defaultParallelism)
 
 
 _PART_PREFIX = "__part_"
@@ -166,7 +160,9 @@ def write_model(
     """Write one model's DataFrame to the configured sink; returns path.
 
     ``mode="append"`` is the resume path (jobs.run_generate): the
-    DataFrame then covers only the missing row range."""
+    DataFrame then covers only the missing row range. For CSV/Parquet
+    its partitions are the write tasks: build it with
+    :func:`write_tasks` partitions so rotation writes whole files."""
     path = os.path.join(out.dir, model.model_dir)
 
     if out.type == "devnull":
@@ -175,9 +171,7 @@ def write_model(
 
     if out.type in ("csv", "parquet"):
         csv = out.type == "csv"
-        fdf = _coalesce_for_rotation(
-            _csv_formatted(df, out) if csv else _parquet_rounded(df, out), model
-        )
+        fdf = _csv_formatted(df, out) if csv else _parquet_rounded(df, out)
         # pyarrow path when per-column encodings are configured OR the
         # codec is one Spark's writer can't produce (BROTLI / LZ4_RAW,
         # reference writer/parquet/parquet.go:34-43)
@@ -210,9 +204,9 @@ def write_model(
         elif out.zorder_by:
             # multi-dimensional clustering: one range shuffle on the
             # Morton code (partition keys lead both the partitioning and
-            # the sort — see sinks/zorder.py). Overrides the rotation
-            # coalesce's partition count; rows_per_file still caps file
-            # sizes via maxRecordsPerFile.
+            # the sort — see sinks/zorder.py). Overrides the range's
+            # write-task count; rows_per_file still caps file sizes via
+            # maxRecordsPerFile.
             from sdvg_spark.sinks.zorder import apply_zorder
 
             pdf = apply_zorder(pdf, model, out, lead=parts)
@@ -223,10 +217,6 @@ def write_model(
                 "emptyValue": "",
             }
         else:
-            spark.conf.set(
-                "spark.sql.parquet.outputTimestampType",
-                "TIMESTAMP_MILLIS" if out.timestamp_unit == "millis" else "TIMESTAMP_MICROS",
-            )
             options = {"compression": out.compression}
         w = (
             pdf.write.mode(mode)
@@ -235,7 +225,21 @@ def write_model(
         )
         if parts:
             w = w.partitionBy(*parts)
-        w.format(out.type).save(path)
+        ts_key = "spark.sql.parquet.outputTimestampType"
+        prev_ts = spark.conf.get(ts_key, None)
+        if not csv:
+            spark.conf.set(
+                ts_key, "TIMESTAMP_MILLIS" if out.timestamp_unit == "millis" else "TIMESTAMP_MICROS"
+            )
+        try:
+            w.format(out.type).save(path)
+        finally:
+            # the encoding is session-wide: later writes in a long-lived
+            # session (serve) must not inherit this model's
+            if prev_ts is None:
+                spark.conf.unset(ts_key)
+            else:
+                spark.conf.set(ts_key, prev_ts)
         _restore_layout(path, model, f".{out.type}")
         return path
 

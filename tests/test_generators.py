@@ -463,3 +463,64 @@ def test_column_df_matches_model_df(spark, model, column):
     assert joined.count() == rows
     assert joined.filter(~F.col(column).eqNullSafe(F.col("want"))).count() == 0
     assert joined.filter(F.col(column).isNotNull()).count() > 0
+
+
+KERNEL_CFG = {
+    "random_seed": 23,
+    "models": {
+        "k": {
+            "rows_count": 1500,
+            "columns": [
+                # sequencer struct kernel, single range: struct(num, r01)
+                {"name": "i64", "type": "integer",
+                 "type_params": {"bit_width": 64, "from": -10**12, "to": 10**12}},
+                # sequencer struct kernel, multi-range: struct(ridx, num, r01)
+                # (the bench mix column)
+                {"name": "mix", "type": "integer", "ranges": [
+                    {"type_params": {"bit_width": 32, "from": 0, "to": 100},
+                     "range_percentage": 0.5},
+                    {"type_params": {"bit_width": 32, "from": 1000, "to": 2000},
+                     "range_percentage": 0.3},
+                    {"type_params": {"bit_width": 32, "from": 10**6, "to": 10**7},
+                     "range_percentage": 0.2, "ordered": True}]},
+                # fused kernel, single range, with nulls
+                {"name": "uuid", "type": "uuid", "null_percentage": 0.2},
+                {"name": "s", "type": "string", "null_percentage": 0.3,
+                 "type_params": {"min_length": 3, "max_length": 9}},
+                # fused kernel, multi-range
+                {"name": "tmpl_text", "type": "string", "ranges": [
+                    {"type_params": {"template": "Aa-00#"}, "range_percentage": 0.4,
+                     "null_percentage": 0.25},
+                    {"type_params": {"logical_type": "text", "min_length": 8,
+                                     "max_length": 40},
+                     "range_percentage": 0.6}]},
+                # native phone range + value-UDF text range
+                {"name": "phone_text", "type": "string", "ranges": [
+                    {"type_params": {"logical_type": "phone"}, "range_percentage": 0.5},
+                    {"type_params": {"logical_type": "text", "min_length": 8,
+                                     "max_length": 32},
+                     "range_percentage": 0.5, "null_percentage": 0.2}]},
+            ],
+        }
+    },
+}
+
+
+@pytest.mark.parametrize("column", ["i64", "mix", "uuid", "s", "tmpl_text", "phone_text"])
+def test_kernel_flavours_match_oracle(spark, column):
+    """Every Arrow kernel flavour (sequencer struct single/multi-range,
+    fused single-range with nulls, fused multi-range, native + value-UDF
+    mix) equals the DuckDB oracle value for value, nulls included."""
+    import duckdb
+
+    from sdvg_spark.oracle import column_oracle_sql
+
+    cfg = parse_config(KERNEL_CFG)
+    got = {r.id: r[column] for r in Engine(cfg).column_df(spark, "k", column).collect()}
+    sql = column_oracle_sql(cfg, "k", column)
+    assert sql is not None
+    want = dict(duckdb.connect().execute(sql).fetchall())
+    assert len(got) == 1500
+    assert got == want
+    if column in ("uuid", "s", "tmpl_text", "phone_text"):
+        assert 0 < sum(v is None for v in got.values()) < 1500

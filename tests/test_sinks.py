@@ -86,6 +86,56 @@ def test_parquet_roundtrip_and_rotation(spark, tmp_path):
     assert (n, kmax) == (1000, 1000)
 
 
+@pytest.mark.parametrize(
+    "rows,rows_per_file,files", [(500, None, 1), (1000, 250, 4), (600, 200, 3)]
+)
+def test_parquet_rotation_exact_layout(spark, tmp_path, rows, rows_per_file, files):
+    """The model's range is built with one task per rotated file, so
+    every file is full: the default model (rows_per_file = rows_count)
+    writes one file, 1000 rows at 250 four files of 250, 600 rows at 200
+    three files of 200. Reading t_0, t_1, ... in numeric order gives the
+    ordered column k as 1..N."""
+    raw = _cfg(tmp_path / "lay", "parquet", rows=rows)
+    if rows_per_file:
+        raw["models"]["t"]["rows_per_file"] = rows_per_file
+    run_generate(raw, spark=spark)
+    paths = sorted(
+        glob.glob(f"{tmp_path}/lay/t/*.parquet"),
+        key=lambda p: int(os.path.basename(p)[len("t_") : -len(".parquet")]),
+    )
+    assert [os.path.basename(p) for p in paths] == [f"t_{i}.parquet" for i in range(files)]
+    con = duckdb.connect()
+    ks = [[k for (k,) in con.execute(f"SELECT k FROM read_parquet('{p}')").fetchall()]
+          for p in paths]
+    assert [len(f) for f in ks] == [rows // files] * files
+    assert [k for f in ks for k in f] == list(range(1, rows + 1))
+
+
+def test_parquet_timestamp_unit_does_not_leak_into_session(spark, tmp_path):
+    """A millis Parquet write sets the session's timestamp encoding only
+    for its own write: the previous value (set or unset) comes back."""
+    import pyarrow.parquet as pq
+
+    key = "spark.sql.parquet.outputTimestampType"
+    saved = spark.conf.get(key, None)
+    try:
+        for before in (None, "INT96"):
+            if before is None:
+                spark.conf.unset(key)
+            else:
+                spark.conf.set(key, before)
+            out = tmp_path / f"ms_{before}"
+            run_generate(_cfg(out, "parquet", timestamp_unit="millis"), spark=spark)
+            assert spark.conf.get(key, None) == before
+            (path,) = glob.glob(f"{out}/t/*.parquet")
+            assert pq.read_schema(path).field("ts").type.unit == "ms"
+    finally:
+        if saved is None:
+            spark.conf.unset(key)
+        else:
+            spark.conf.set(key, saved)
+
+
 def test_partition_columns(spark, tmp_path):
     raw = _cfg(tmp_path / "part", "parquet")
     raw["models"]["t"]["partition_columns"] = [{"name": "tag"}]
